@@ -2229,6 +2229,21 @@ private[catalog] object GraftTable {
     * order. Presence switches the table onto the partition-pure write path
     * (one segment per partition value per write — see GraftPartitions). */
   val PartitionByProp = "graft.partition-by"
+
+  /** The one place a graft read lists files: Spark's v2 parquet scan builder
+    * over exactly `dirs`, read as `schema` and, when given, column-pruned to
+    * `pruned`. Creating the builder lists every dir (past 32 dirs that is a
+    * distributed Spark job), so callers pass only the dirs a scan will
+    * actually read: zone/bloom survivors, one commit's new segments, or none
+    * at all when only a reader factory is wanted. */
+  def parquetScan(name: String, dirs: Seq[String], schema: StructType,
+                  options: CaseInsensitiveStringMap,
+                  pruned: Option[StructType] = None): ScanBuilder = {
+    val b = ParquetTable(name, SparkSession.active, options, dirs, Some(schema),
+      classOf[ParquetFileFormat]).newScanBuilder(options)
+    pruned.foreach(b.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns)
+    b
+  }
 }
 
 private[catalog] final class GraftTable(
@@ -2350,15 +2365,12 @@ private[catalog] final class GraftTable(
     * filter pushdown, column pruning, and vectorized decode come with it —
     * wrapped in the zone-map layer: pushed predicates drop whole segments
     * whose committed min/max/null stats cannot satisfy them, at PLAN time,
-    * before any file is opened (SegmentStats.scala). */
+    * before any file is listed or opened (SegmentStats.scala). */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    def mkInner(schema: StructType)(dirs: Seq[String]): ScanBuilder =
-      ParquetTable(name(), SparkSession.active, options, dirs,
-        Some(schema), classOf[ParquetFileFormat]).newScanBuilder(options)
     val (segs, dvMap) = visibleWithDvs(options)
     val rs = meta.readSchema // name- or id-resolved per the table's state
     def pruning(ss: Seq[String], schema: StructType) =
-      new GraftPruningScanBuilder(mkInner(schema),
+      new GraftPruningScanBuilder(schema,
         ss.map(s => s -> tableDir.resolve(s).toString), meta.zstats,
         tableDir, name(), rs, options,
         spjFields = GraftPartitions.routedFields(meta.props),
@@ -2484,15 +2496,12 @@ private[catalog] final class GraftRowLevelOperation(
   override def command(): RowLevelOperation.Command = info.command()
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    def mkInner(dirs: Seq[String], schema: StructType): ScanBuilder =
-      ParquetTable(table.name(), SparkSession.active, options, dirs,
-        Some(schema), classOf[ParquetFileFormat]).newScanBuilder(options)
     val op = this
     new ScanBuilder with SupportsPushDownRequiredColumns {
       private var pruned: StructType = null
       override def pruneColumns(requiredSchema: StructType): Unit = pruned = requiredSchema
       override def build(): Scan =
-        new GroupScan(op, mkInner, baseSegments, table.dir, metaAtLoad,
+        new GroupScan(op, table.name(), options, baseSegments, table.dir, metaAtLoad,
           Option(pruned))
     }
   }
@@ -2507,19 +2516,21 @@ private[catalog] final class GraftRowLevelOperation(
 
 /** Zone-map segment pruning around the delegated parquet ScanBuilder.
   *
-  * `pushFilters` consults each visible segment's committed min/max/null stats
-  * (SegmentStats) and REBUILDS the inner builder over only the segments a
-  * predicate could match — plan-time data skipping with zero file IO, the
-  * catalog analogue of parquet's row-group skipping one level up. Pruning is
-  * conservative (segments without stats, non-literal shapes, non-ASCII string
-  * bounds all keep), and the filters are still forwarded to the parquet
-  * builder, so a wrongly-kept segment costs IO, never rows.
+  * Prune first, then list: `pushFilters` consults each visible segment's
+  * committed min/max/null stats (SegmentStats) and bloom index, and only then
+  * builds the inner parquet builder — over the segments a predicate could
+  * match. The inner builder lists its dirs when created, so it is built at
+  * most once per read, on first need: a stats-served aggregate never builds
+  * it and lists nothing, a point lookup lists only its bloom survivors.
+  * Pruning is conservative (segments without stats, non-literal shapes,
+  * non-ASCII string bounds all keep), and the filters are still forwarded to
+  * the parquet builder, so a wrongly-kept segment costs IO, never rows.
   *
   * Row-level operation scans never see this pruning: GraftRowLevelOperation's
   * builder deliberately exposes no filter pushdown, so group scans always
   * cover the full replacement set. */
 private[catalog] final class GraftPruningScanBuilder(
-    mkInner: Seq[String] => ScanBuilder,
+    fileSchema: StructType, // tableSchema, plus the row-index column on a DV'd side
     segments: Seq[(String, String)], // (segment name, absolute dir)
     zstats: Map[String, String],
     tableDir: Path, tableName: String, tableSchema: StructType,
@@ -2532,28 +2543,44 @@ private[catalog] final class GraftPruningScanBuilder(
   with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
-  private var inner = mkInner(segments.map(_._2))
   private var live = segments // post-zone-pruning survivors (build-time stats)
   private var prunedSchema: StructType = null
   private var anyFilterPushed = false
   private var lastPushed: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil
   private var statsAgg: Option[(StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])] = None
+  private var parquet: Option[ScanBuilder] = None
 
-  private def cat = inner.asInstanceOf[org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters]
+  /** The parquet builder over `live` with the recorded column pruning and
+    * pushed filters replayed — built, and `live` listed, the first time a
+    * parquet scan is needed. */
+  private def inner: ScanBuilder = parquet.getOrElse {
+    parquet = Some(replayed(live.map(_._2), prunedSchema, lastPushed))
+    parquet.get
+  }
+
+  private def replayed(dirs: Seq[String], schema: StructType,
+                       pushed: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): ScanBuilder = {
+    val b = GraftTable.parquetScan(tableName, dirs, fileSchema, options, Option(schema))
+    if (pushed.nonEmpty) catalystOf(b).pushFilters(pushed)
+    b
+  }
+
+  private def catalystOf(b: ScanBuilder) =
+    b.asInstanceOf[org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters]
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // in stats-served aggregate mode the output schema is the aggregate's,
     // owned by build() — a late pruneColumns must not reach the parquet side
     if (statsAgg.isDefined) return
     prunedSchema = requiredSchema
-    inner.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(requiredSchema)
+    parquet.foreach(_.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(requiredSchema))
   }
 
   override def pushFilters(
       filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
     : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
     anyFilterPushed ||= filters.nonEmpty
-    val surviving = segments.filter { case (name, dir) =>
+    live = segments.filter { case (name, dir) =>
       val zoneKeeps = zstats.get(name) match {
         case Some(enc) =>
           val st = scala.util.Try(SegmentStats.decode(enc)).toOption
@@ -2564,14 +2591,11 @@ private[catalog] final class GraftPruningScanBuilder(
       // lookup index (GraftBloom) — prunes where range stats are blind
       zoneKeeps && filters.forall(f => GraftBloom.mayContain(dir, f))
     }
-    if (surviving.size < segments.size) {
-      inner = mkInner(surviving.map(_._2))
-      if (prunedSchema != null)
-        inner.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(prunedSchema)
-    }
-    live = surviving
+    // Spark reads pushedFilters back right away and only the parquet builder
+    // knows which filters translate, so it is built here — over survivors only
+    parquet = Some(replayed(live.map(_._2), prunedSchema, Nil))
     lastPushed = filters
-    cat.pushFilters(filters)
+    catalystOf(inner).pushFilters(filters)
   }
 
   /** Plan-time EXACT statistics for the surviving segments, from committed
@@ -2667,7 +2691,7 @@ private[catalog] final class GraftPruningScanBuilder(
   }
 
   override def pushedFilters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    cat.pushedFilters
+    catalystOf(inner).pushedFilters
 
   /** The pruned parquet scan WITHOUT the streamable wrapper — the DV scan
     * builder composes clean+dirty inner scans itself before wrapping.
@@ -2788,18 +2812,9 @@ private[catalog] final class GraftPruningScanBuilder(
     * Spark resolves filterAttributes against the scan output, and a
     * pruned-away column can never be a join key anyway. */
   private[catalog] def runtimePrune(readSchema: StructType): GraftRuntimePrune = {
-    val pushedNow = lastPushed
-    val schemaNow = prunedSchema
-    val rebuild: Seq[String] => Scan = dirs => {
-      val b = mkInner(dirs)
-      if (schemaNow != null)
-        b.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(schemaNow)
-      if (pushedNow.nonEmpty)
-        b.asInstanceOf[org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters]
-          .pushFilters(pushedNow)
-      b.build()
-    }
-    new GraftRuntimePrune(rebuild, live, zstats, readSchema)
+    val (schemaNow, pushedNow) = (prunedSchema, lastPushed)
+    new GraftRuntimePrune(dirs => replayed(dirs, schemaNow, pushedNow).build(),
+      live, zstats, readSchema)
   }
 }
 
@@ -3082,14 +3097,11 @@ private[catalog] final class GraftMicroBatchStream(
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  private def batchOver(dirs: Seq[String]): Batch = {
-    val b = ParquetTable(tableName, SparkSession.active, options, dirs,
-      Some(tableSchema), classOf[ParquetFileFormat]).newScanBuilder(options)
-    // the streaming exec consumes rows in the STREAM's (possibly pruned)
-    // read schema; the per-range scan must project identically
-    b.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(readSchema)
-    b.build().toBatch
-  }
+  // the streaming exec consumes rows in the STREAM's (possibly pruned) read
+  // schema; the per-range scan must project identically
+  private def batchOver(dirs: Seq[String]): Batch =
+    GraftTable.parquetScan(tableName, dirs, tableSchema, options, Some(readSchema))
+      .build().toBatch
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (a, b) = (start.asInstanceOf[Snap].id, end.asInstanceOf[Snap].id)
@@ -3114,9 +3126,8 @@ private[catalog] final class GraftMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     // the factory closes over schemas and conf, not a file list: one built
-    // from the current snapshot reads any range's partitions
-    batchOver(meta.snapshots(meta.current).map(s => tableDir.resolve(s).toString))
-      .createReaderFactory()
+    // over no dirs at all lists nothing and reads any range's partitions
+    batchOver(Nil).createReaderFactory()
 }
 
 /** The row-level operation's group scan. Reads the load-time snapshot's
@@ -3133,7 +3144,7 @@ private[catalog] final class GraftMicroBatchStream(
   * hidden for the same reason it always was: files pruned below the
   * replacement set would drop untouched rows. */
 private[catalog] final class GroupScan(
-    op: GraftRowLevelOperation, mkInner: (Seq[String], StructType) => ScanBuilder,
+    op: GraftRowLevelOperation, tableName: String, options: CaseInsensitiveStringMap,
     baseSegments: Seq[String], tableDir: Path, meta: GraftMeta,
     prunedSchema: Option[StructType]) extends Scan
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
@@ -3145,11 +3156,9 @@ private[catalog] final class GroupScan(
   private def buildInner(segs: Seq[String]): Scan = {
     val dvMap = GraftDv.forSegments(meta, meta.current, segs)
     val rs = meta.readSchema
-    def one(ss: Seq[String], schema: StructType, prune: Option[StructType]): Scan = {
-      val b = mkInner(ss.map(s => tableDir.resolve(s).toString), schema)
-      prune.foreach(b.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns)
-      b.build()
-    }
+    def one(ss: Seq[String], schema: StructType, prune: Option[StructType]): Scan =
+      GraftTable.parquetScan(tableName, ss.map(s => tableDir.resolve(s).toString),
+        schema, options, prune).build()
     if (dvMap.isEmpty) one(segs, rs, prunedSchema)
     else {
       val dirty = segs.filter(dvMap.contains)

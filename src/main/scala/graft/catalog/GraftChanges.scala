@@ -10,8 +10,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -160,10 +158,8 @@ private[catalog] object GraftCdcPlanner {
   private def scanOver(tableName: String, dirs: Seq[String],
                        tableSchema: StructType, pruned: StructType,
                        options: CaseInsensitiveStringMap): Batch = {
-    val b = ParquetTable(s"$tableName-cdc", SparkSession.active, options, dirs,
-      Some(tableSchema), classOf[ParquetFileFormat]).newScanBuilder(options)
-    b.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(pruned)
-    b.build().toBatch
+    GraftTable.parquetScan(s"$tableName-cdc", dirs, tableSchema, options, Some(pruned))
+      .build().toBatch
   }
 }
 

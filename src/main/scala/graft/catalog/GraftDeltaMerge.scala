@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -124,10 +123,8 @@ private[catalog] final class GraftDeltaScan(
     val innerSchema = StructType(dataFields :+ GraftDv.RowIdxField)
     val inner =
       if (segs.isEmpty) None
-      else Some(ParquetTable(tableName, spark, options,
-        segs.map(s => tableDir.resolve(s).toString),
-        Some(innerSchema), classOf[ParquetFileFormat])
-        .newScanBuilder(options).build())
+      else Some(GraftTable.parquetScan(tableName,
+        segs.map(s => tableDir.resolve(s).toString), innerSchema, options).build())
     val dvMap = GraftDv.forSegments(meta, meta.current, segs)
     val positions = GraftDv.loadPositions(spark, tableDir,
       dvMap.values.flatten.toSeq.distinct)
